@@ -28,12 +28,16 @@ def _ddl_names(schema: str) -> list[str]:
     """Column names from a flat DDL string ("a long, b string" -> [a, b]).
 
     Only supports the flat scalar/array DDL the library's literal
-    frames use — no struct fields (their commas would split wrong).
+    frames use — a comma inside any ``<...>`` group (struct fields,
+    map key/value types) would split wrong, so it is rejected.
     """
-    if "<" in schema and "," in schema.split("<", 1)[1].split(">", 1)[0]:
-        raise ValueError(
-            f"local_df supports flat DDL schemas only, got {schema!r}"
-        )
+    depth = 0
+    for ch in schema:
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth > 0:
+            raise ValueError(
+                f"local_df supports flat DDL schemas only, got {schema!r}"
+            )
     return [part.strip().split()[0] for part in schema.split(",")]
 
 

@@ -31,6 +31,17 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
+def _unpersist_all(*frames: DataFrame) -> None:
+    """Unpersist ``frames``, local checkpoints included: on a frame made
+    by ``localCheckpoint``, ``unpersist`` drops only the cache on top,
+    and the checkpointed RDD stays registered until the JVM collects it."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 def connected_components_two_phase(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -93,6 +104,7 @@ def connected_components_two_phase(
     )
     cur = sym
     n_cur: int | None = None
+    ckpts: list[DataFrame] = []
     for rnd in range(max_rounds):
         # ---- large-star: (v, m) for v > u, m = min(N(u) ∪ {u}).
         # Round 0 reads `sym`, which is already symmetric — unioning its
@@ -127,6 +139,7 @@ def connected_components_two_phase(
         )
         if (rnd + 1) % checkpoint_every == 0:
             nxt = nxt.localCheckpoint(eager=False)
+            ckpts.append(nxt)
         nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
         n_new = nxt.count()
         if n_cur is None:
@@ -154,6 +167,7 @@ def connected_components_two_phase(
             sym.unpersist()
             e0.unpersist()
             return labels
+    _unpersist_all(cur, nodes, sym, e0, *ckpts)
     raise RuntimeError(
         f"connected_components_two_phase did not converge in {max_rounds} rounds"
     )
@@ -209,6 +223,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    ckpts: list[DataFrame] = []
     for it in range(max_iters):
         neigh = (
             sym.join(labels, sym.dst == labels.node)
@@ -227,6 +242,7 @@ def connected_components(
         )
         if (it + 1) % checkpoint_every == 0:
             new_labels = new_labels.localCheckpoint(eager=False)
+            ckpts.append(new_labels)
         new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
         changed = (
             new_labels.alias("n")
@@ -246,10 +262,9 @@ def connected_components(
             # large enough that star-halving beats one-hop propagation
             # from here on. Restart on the raw edges — the two-phase
             # pass is O(log d) rounds total, cheaper than resuming.
-            sym.unpersist()
-            e.unpersist()
-            labels.unpersist()
+            _unpersist_all(labels, sym, e, *ckpts)
             return connected_components_two_phase(edges, src_col, dst_col)
+    _unpersist_all(labels, sym, e, *ckpts)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} iterations"
     )

@@ -3,9 +3,12 @@
 Behavioral parity with
 ``/root/reference/src/data_pipeline/storage/parquet.py:13-204``, with the
 read path restructured for Catalyst: each getter declares one lazy plan
-(scan -> semi-filter -> range filter -> projection) so predicate pushdown
-and column pruning reach the Parquet reader, instead of the reference's
-load-everything-then-filter-in-memory anti-pattern.
+(scan -> asset filter -> date-range filter -> projection) so predicate
+pushdown and column pruning reach the Parquet reader, instead of the
+reference's load-everything-then-filter-in-memory anti-pattern. The
+pandas getters collect that pruned scan and sort it on the driver on
+the getter's keys (the reference's ``sort_values`` + fresh index); the
+``get_*_df`` frames stay lazy and unsorted.
 
 Error contracts preserved:
 - missing dataset          -> FileNotFoundError (parquet.py:43-44)
@@ -218,7 +221,8 @@ class LocalParquetDataHandler(DataHandler):
 
     @staticmethod
     def _finish(df: DataFrame, sort_keys: list[str]) -> pd.DataFrame:
-        return df.orderBy(*sort_keys).toPandas()
+        # Driver-side sort: one scan-and-collect job, not sample + exchange + result.
+        return df.toPandas().sort_values(sort_keys, kind="stable", ignore_index=True)
 
     # ---------------------------------------------------------- lazy getters
 

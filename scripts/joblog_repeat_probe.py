@@ -45,6 +45,8 @@ def main() -> None:
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": log_dir,
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.compress": "false",
         },
     )
     spark.range(1).write.format("noop").mode("overwrite").save()

@@ -6,6 +6,7 @@ import pytest
 
 from quantlab_data_pipeline_spark.operators.graph import (
     connected_components,
+    connected_components_two_phase,
     dedup_cluster_assignments,
 )
 
@@ -54,6 +55,34 @@ def test_non_convergence_raises(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(_edges(spark, [(i, i + 1) for i in range(1, 9)]),
                              max_iters=2)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda e: connected_components_two_phase(e, max_rounds=1),
+        lambda e: connected_components_two_phase(e, max_rounds=3),
+        lambda e: connected_components(e, algorithm="label", max_iters=1),
+        lambda e: connected_components(
+            e, algorithm="label", max_iters=3, checkpoint_every=2
+        ),
+    ],
+    ids=["two_phase-1", "two_phase-3", "label-1", "label-3-checkpointed"],
+)
+def test_non_convergence_releases_persisted_frames(spark, run):
+    """A raise leaves no persisted frame or local checkpoint behind.
+    Compared as RDD ids, so an unrelated RDD the context cleaner drops
+    meanwhile cannot mask a leak."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    edges = _edges(spark, [(i, i + 1) for i in range(64)])
+    before = persisted()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run(edges)
+    assert persisted() - before == set()
 
 
 def test_cluster_assignments_keeper_policy(spark):
